@@ -142,16 +142,39 @@ def test_prepare_raw_keeps_full_numeric_array(spark):
     assert got == want
 
 
-def test_run_pipeline_reference_main_parity(spark):
+def test_run_pipeline_reference_main_parity(spark, monkeypatch):
     """runner.run_pipeline = the reference's main(): both preparations,
     timed battery, evaluation, and ALL four viz artifact families in
-    one run dir, plus the persisted summary."""
-    from web_attack_detection_spark.runner import run_pipeline
+    one run dir, plus the persisted summary.  The summary is a
+    driver-local relation equal to summary.csv whose collect starts no
+    Spark job; V4 counts every row of the scored test split; no cached
+    split outlives the run."""
+    import pandas as pd
 
+    from web_attack_detection_spark import runner
+    from web_attack_detection_spark.plans.flagship import derive_wide_events
+
+    battery_preps = runner.battery_preps
+    splits = []
+
+    def keep_preps(*a, **k):
+        fp, preps = battery_preps(*a, **k)
+        splits.extend(df for pair in preps.values() for df in pair)
+        return fp, preps
+
+    monkeypatch.setattr(runner, "battery_preps", keep_preps)
+    sc = spark.sparkContext
     with tempfile.TemporaryDirectory() as d:
-        out = run_pipeline(
-            spark, SF_SMOKE, out_dir=d, models=("logreg", "nb")
-        ).collect()
+        summary = runner.run_pipeline(spark, SF_SMOKE, out_dir=d, models=("logreg", "nb"))
+        assert summary.schema.simpleString() == (
+            "struct<model:string,prep:string,accuracy:double,train_seconds:double>"
+        )
+        sc.setJobGroup("run_pipeline_summary", "summary collect")
+        try:
+            out = summary.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("run_pipeline_summary")) == []
         assert len(out) == 4  # 2 models x 2 preparations
         assert {(r["model"], r["prep"]) for r in out} == {
             ("logreg", "raw"),
@@ -171,6 +194,16 @@ def test_run_pipeline_reference_main_parity(spark):
             "confusion.svg",
             "summary.csv",
         } <= names
+        csv = pd.read_csv(run / "summary.csv")
+        assert list(csv.columns) == ["model", "prep", "accuracy", "train_seconds"]
+        assert [tuple(r) for r in csv.itertuples(index=False)] == [tuple(r) for r in out]
+        # both preparations keep every test row (no unseen categories
+        # or labels in the smoke split), so V4 must count all of them
+        events = derive_wide_events(load_table(spark, SF_SMOKE, "events"))
+        n_test = events.filter(F.col("event_id") % 4 == 1).count()
+        assert pd.read_csv(run / "confusion.csv")["n"].sum() == n_test
+    assert len(splits) == 4
+    assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk for df in splits)
 
 
 def test_protocol_history_flows_through_v1_plot(spark, tmp_path):

@@ -248,16 +248,27 @@ def test_stream_static_enrichment_join(spark):
 
 
 def test_foreachbatch_scoring_reuses_batch_pipeline(spark):
-    """Fit the feature pipeline in batch, score the stream via
-    foreachBatch with the SAME transform — predictions must match the
-    batch-side transform of the same rows."""
+    """Fit the feature pipeline and a classifier in batch, score a
+    multi-file replay via foreachBatch with the SAME transform —
+    predictions must match the batch-side transform of the same rows,
+    and the transform is applied once per query, not once per
+    micro-batch."""
+    from pyspark.ml.classification import NaiveBayes
+
     from web_attack_detection_spark.functions.feature import fit_feature_pipeline
+    from web_attack_detection_spark.ml.pipeline import predict, to_vector
 
     events = load_table(spark, SF_SMOKE, "events").drop("props")
     fitted = fit_feature_pipeline(events.drop("ts"), label_col="event_type")
+    nb = NaiveBayes(featuresCol="__mlp_in", labelCol="label", modelType="gaussian").fit(
+        to_vector(fitted.transform(events.drop("ts")), "features", "__mlp_in")
+    )
+    calls = []
 
-    def transform(batch_df):
-        return fitted.transform(batch_df.drop("ts")).select("event_id", "features", "label")
+    def transform(df):
+        calls.append(df.isStreaming)
+        scored = predict(nb, fitted.transform(df.drop("ts")), "features")
+        return scored.select("event_id", "features", "label", "prediction")
 
     collected = []
 
@@ -265,23 +276,26 @@ def test_foreachbatch_scoring_reuses_batch_pipeline(spark):
         collected.extend(df.collect())
 
     with tempfile.TemporaryDirectory() as d:
-        events.coalesce(1).write.parquet(f"{d}/in")
+        events.repartitionByRange(3, "event_id").write.parquet(f"{d}/in")
         q = score_stream(
-            stream_events_from_dir(spark, f"{d}/in"),
+            stream_events_from_dir(spark, f"{d}/in", max_files_per_trigger=1),
             transform,
             sink,
             checkpoint_dir=f"{d}/ckpt",
             trigger_once=True,
         )
         q.awaitTermination(120)
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
 
-    got = {r["event_id"]: (r["features"], r["label"]) for r in collected}
+    assert len(batches) >= 3
+    assert calls == [True]
     want = {
-        r["event_id"]: (r["features"], r["label"])
-        for r in fitted.transform(events.drop("ts")).select("event_id", "features", "label").collect()
+        r["event_id"]: (r["features"], r["label"], r["prediction"])
+        for r in transform(events).collect()
     }
+    got = {r["event_id"]: (r["features"], r["label"], r["prediction"]) for r in collected}
     assert got == want
-    assert len(got) == events.count()
+    assert len(collected) == len(got) == events.count()
 
 
 def test_transform_with_state_totals_matches_classic(spark, tmp_path):

@@ -45,6 +45,30 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
+# SQL-text literals: expressions generated as text parse in one py4j call
+# instead of one Column-API round trip per node
+# ---------------------------------------------------------------------------
+
+
+def q(n: str) -> str:
+    """Backtick-quoted SQL identifier."""
+    return "`" + n.replace("`", "``") + "`"
+
+
+def dlit(x) -> str:
+    """Exact DOUBLE literal: ``CAST('<repr>' AS DOUBLE)`` string-parses
+    correctly rounded and constant-folds to the same IEEE double
+    ``F.lit(float(x))`` embeds.  ``float()`` first, so a ``Decimal`` or
+    numpy scalar embeds its value, not its type's repr."""
+    return "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def slit(s: str) -> str:
+    """Escaped SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# ---------------------------------------------------------------------------
 # R3 — dtype-driven column classification
 # ---------------------------------------------------------------------------
 
@@ -301,20 +325,11 @@ class FeaturePipelineModel:
         order — and therefore every output bit — are unchanged
         (plan diff in plans/r11; oracle sweeps green)."""
 
-        def q(n: str) -> str:
-            return "`" + n.replace("`", "``") + "`"
-
-        def dlit(x) -> str:
-            return "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{x!r}' AS DOUBLE)"
-
-        def slit(s: str) -> str:
-            return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
         def lookup_sql(col: str, mapping) -> str:
             if not mapping:
                 return "CAST(NULL AS DOUBLE)"
             pairs = ", ".join(
-                f"{slit(k)}, {dlit(float(v))}" for k, v in mapping.items()
+                f"{slit(k)}, {dlit(v)}" for k, v in mapping.items()
             )
             return f"element_at(map({pairs}), CAST({q(col)} AS STRING))"
 
@@ -358,7 +373,7 @@ class FeaturePipelineModel:
         for c in self.categorical_cols:
             width = self.cat_sizes[c] - 1  # apply_one_hot drop_last
             slots = ", ".join(
-                f"CASE WHEN {q(c + '_idx')} = {dlit(float(i))} THEN 1.0D ELSE 0.0D END"
+                f"CASE WHEN {q(c + '_idx')} = {dlit(i)} THEN 1.0D ELSE 0.0D END"
                 for i in range(width)
             )
             upd2.append((f"{c}_vec", f"array({slots})"))
@@ -527,39 +542,7 @@ def fit_feature_pipeline(
     cat_counts: dict[str, list] = {c: [] for c in fit_cols}
 
     if analytic:
-        aggs = [F.count(F.lit(1)).alias("cnt")]
-        for j in range(m):
-            x = F.col(f"x{j}")
-            aggs += [
-                F.count(x).alias(f"nn{j}"),
-                F.avg(x).alias(f"avg{j}"),
-                F.var_samp(x).alias(f"var{j}"),
-            ]
-        fl = F.col("full")
-        aggs.append(F.count(F.when(fl, 1)).alias("nfull"))
-        for j in range(m):
-            x = F.col(f"x{j}")
-            aggs += [
-                F.sum(F.when(fl, x)).alias(f"sf{j}"),
-                F.count(F.when(fl, x)).alias(f"nnf{j}"),
-            ]
-        for i in range(m):
-            xi = F.col(f"x{i}")
-            for j in range(i, m):
-                xj = F.col(f"x{j}")
-                aggs.append(F.sum(F.when(fl, xi * xj)).alias(f"p{i}_{j}"))
-                if j > i:
-                    aggs.append(
-                        F.sum(F.when(fl & xi.isNull(), xj)).alias(f"a{i}_{j}")
-                    )
-                    aggs.append(
-                        F.sum(F.when(fl & xj.isNull(), xi)).alias(f"a{j}_{i}")
-                    )
-                    aggs.append(
-                        F.count(
-                            F.when(fl & xi.isNull() & xj.isNull(), 1)
-                        ).alias(f"c{i}_{j}")
-                    )
+        aggs = _analytic_aggs(m)
         stats_rows = (
             train.select(F.explode(F.array(*structs)).alias("p"))
             .select("p.*")
@@ -598,16 +581,8 @@ def fit_feature_pipeline(
         # 1.7× faster than the struct-melt form; parity at m=6.
         from pyspark.sql import Observation
 
-        metrics = [F.count(F.lit(1)).alias("cnt")]
-        for j, c in enumerate(numeric):
-            x = F.col(c).cast("double")
-            metrics += [
-                F.count(x).alias(f"nn{j}"),
-                F.avg(x).alias(f"avg{j}"),
-                F.var_samp(x).alias(f"var{j}"),
-            ]
         obs = Observation()
-        observed = train.observe(obs, *metrics)
+        observed = train.observe(obs, *_moment_metrics(numeric))
         if fit_cols:
             pairs = observed.select(
                 F.explode(
@@ -695,6 +670,53 @@ def fit_feature_pipeline(
             )
         model.pca_k = k
     return model
+
+
+def _moment_metrics(numeric: list[str]):
+    """The gramian/no-PCA branch's observed metrics: the row count, then
+    per numeric ``j`` its non-null count ``nn{j}``, ``avg{j}`` and
+    ``var{j}`` (sample variance) over the column cast to double.
+
+    Built as SQL text, one ``F.expr`` per metric: the Column-API chain
+    issued ~10 py4j calls per metric (0.47-0.57 s for the 127 metrics of
+    the 42-numeric UNSW shape on a 4-core host, against 0.04-0.07 s as
+    text) and parses
+    to the same expression trees (tests/test_ml.py)."""
+    out = ["count(1) AS cnt"]
+    for j, c in enumerate(numeric):
+        x = f"CAST({q(c)} AS DOUBLE)"
+        out += [f"count({x}) AS nn{j}", f"avg({x}) AS avg{j}", f"var_samp({x}) AS var{j}"]
+    return [F.expr(e) for e in out]
+
+
+def _analytic_aggs(m: int):
+    """The analytic branch's aggregates over the melt's ``x0..x{m-1}``
+    and ``full`` fields (see fit_feature_pipeline): the
+    :func:`_moment_metrics` moments, the ``full``-gated row count, sums
+    and counts, and per numeric pair the raw product sum ``p{i}_{j}``
+    plus the NULL-decomposition terms ``a{i}_{j}``, ``a{j}_{i}``,
+    ``c{i}_{j}``.  SQL text for the same reason as
+    :func:`_moment_metrics`; O(m²) of them."""
+    fl = q("full")
+    out = ["count(1) AS cnt"]
+    for j in range(m):
+        out += [f"count(x{j}) AS nn{j}", f"avg(x{j}) AS avg{j}", f"var_samp(x{j}) AS var{j}"]
+    out.append(f"count(CASE WHEN {fl} THEN 1 END) AS nfull")
+    for j in range(m):
+        out += [
+            f"sum(CASE WHEN {fl} THEN x{j} END) AS sf{j}",
+            f"count(CASE WHEN {fl} THEN x{j} END) AS nnf{j}",
+        ]
+    for i in range(m):
+        for j in range(i, m):
+            out.append(f"sum(CASE WHEN {fl} THEN x{i} * x{j} END) AS p{i}_{j}")
+            if j > i:
+                out += [
+                    f"sum(CASE WHEN {fl} AND x{i} IS NULL THEN x{j} END) AS a{i}_{j}",
+                    f"sum(CASE WHEN {fl} AND x{j} IS NULL THEN x{i} END) AS a{j}_{i}",
+                    f"count(CASE WHEN {fl} AND x{i} IS NULL AND x{j} IS NULL THEN 1 END) AS c{i}_{j}",
+                ]
+    return [F.expr(e) for e in out]
 
 
 def _pca_from_fused_stats(

@@ -340,19 +340,20 @@ def ref_unsw_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB accuracy depends on MLlib internals, but the summary shape
     (model × prep) and accuracy bounds are pytested.
 
-    Profile (round-6 verdict #6, ``tools/profile_battery.py``, sf0.1):
-    the wall is the 8 MLlib fits plus the one-time prep fits, not
-    shareable re-derivation.  Stage timings (cold session): ingest
-    8.5 s (first-touch CSV classload; ~1 s warm), 9-stage pipeline fit
-    incl PCA20 10.6 s cold / ~3-4 s warm, per-prep train
-    materialization 0.8+1.5 s, then the 4×2 fit+evaluate battery
-    ~17 s cold / ~7 s warm (mlp and logreg are the iterative
-    expensive ones; NB's single-pass fit is ~0.6 s).  The preps are
-    computed ONCE by ``battery_preps`` and cached per prep before the
-    fits, so the only candidate restructure — sharing prepared
-    features across model variants — is already the shape; caching
-    the CSV train for the fused fit was separately measured SLOWER
-    (7.3 vs 8.7 s, round-5 note).  No restructure warranted.
+    Profile: the traced ``detect`` workload of the benchmark
+    (``python3 perfbench/run.py --workload detect --trace 1``) runs this
+    same call with battery ``("nb",)`` over 4,000 UNSW-shaped events
+    and splits it by layer.  On a 4-core host, before → after the
+    driver-local summary, V4 from the cached test split and SQL-text
+    fit aggregates: runner self-time (prep orchestration, summary)
+    3.45 → 2.29 s, V1-V4 artifacts 0.69 → 0.15 s, feature fit
+    4.06 → 3.02 s, NB fit 0.97 → 0.98 s, evaluation 0.92 → 0.78 s,
+    Spark jobs per run_pipeline + replay 36 → 34.  The wall is the
+    cold fit path (feature fit + NB fit + evaluation), not shareable
+    re-derivation: the preps are computed ONCE by ``battery_preps`` and
+    cached per prep before the fits, and caching the CSV train for the
+    fused fit was separately measured SLOWER (7.3 vs 8.7 s, round-5
+    note).
     """
     import tempfile
 

@@ -290,16 +290,19 @@ def score_stream(
 ):
     """Score a stream with a *batch-fitted* pipeline via foreachBatch.
 
-    ``transform_fn(batch_df) -> DataFrame`` is the same function used
-    on the batch side (fitted FeaturePipelineModel.transform + MLlib
-    model.transform); ``sink_fn(df, epoch_id)`` receives the scored
-    micro-batch (exactly-once if the sink is idempotent on epoch_id).
+    ``transform_fn(df) -> DataFrame`` is the same function used on the
+    batch side (fitted FeaturePipelineModel.transform + MLlib
+    model.transform).  It is applied ONCE, to the streaming DataFrame,
+    so the feature and predict plan is built once per query and the
+    engine plans it incrementally per trigger (Structured Streaming's
+    declare-once model) instead of rebuilding it over py4j in every
+    micro-batch.  It must therefore be row-local — projections,
+    filters, literal lookups, scalar/pandas UDFs, no aggregation or
+    sort — which is what makes it stream-legal.
+    ``sink_fn(df, epoch_id)`` receives each scored micro-batch
+    (exactly-once if the sink is idempotent on epoch_id).
     """
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        sink_fn(transform_fn(batch_df), epoch_id)
-
-    writer = stream.writeStream.foreachBatch(_process).option(
+    writer = transform_fn(stream).writeStream.foreachBatch(sink_fn).option(
         "checkpointLocation", checkpoint_dir
     )
     if trigger_once:
